@@ -14,7 +14,8 @@ Semantic parity notes (pandas → Spark):
   - x/0 → ±inf in pandas, NULL in Spark — both scrubbed to 0 at the
     fact stage exactly where the reference scrubs (main.py:266,283,334)
   - pandas outer merge sorts on the join key → surrogate ids follow
-    sorted-suburb order; reproduced with row_number over SUBURB.
+    sorted-suburb order; reproduced with ONE row_number over SUBURB
+    on the merged frame, which every star id derives from.
 """
 
 from __future__ import annotations
@@ -164,12 +165,16 @@ def merge_datasets(
     (reference merge_datasets, main.py:171-202). The named-column join
     form coalesces SUBURB like pandas merge. All three branches are
     suburb-grained (tiny vs their inputs) — at scale these joins ride
-    AQE broadcast; the heavy lifting happened in the upstream aggs."""
+    AQE broadcast; the heavy lifting happened in the upstream aggs.
+
+    Every merged row gets its ``id_suburb`` here, numbered in sorted
+    SUBURB order (pandas outer merge sorts its key; reference
+    main.py:217-220). This one numbering is the star's only key
+    decision: the suburb dim and every fact id are projections of it."""
     merged = ev_summary.join(electricity, "SUBURB", "full_outer").join(
         pollution, "SUBURB", "full_outer"
     )
-    merged = merged.na.fill(dict.fromkeys(_FILL_ZERO, 0.0))
-    return merged.withColumns(
+    merged = merged.na.fill(dict.fromkeys(_FILL_ZERO, 0.0)).withColumns(
         {
             # unguarded, like the reference at this stage (main.py:198-200);
             # pandas yields ±inf/NaN here, Spark NULL — both are scrubbed
@@ -182,6 +187,7 @@ def merge_datasets(
             "EV_ADOPTION_SCORE": F.col("TOTAL_EVs") * (1 - F.col("NO2_CHANGE_PCT") / 100),
         }
     )
+    return add_surrogate_key(merged, "id_suburb", ["SUBURB"])
 
 
 # ---------------------------------------------------------------------------
@@ -211,16 +217,14 @@ def build_dimensions(
     spark: SparkSession, final_df: DataFrame, ev_raw: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Dimensions (reference create_dimension_tables, main.py:204-238):
-    two literal dims, suburb ids in sorted order (pandas outer merge
-    sorts its key — row_number over SUBURB reproduces the golden ids),
-    vehicle types from the RAW (unfiltered) EV frame."""
+    two literal dims, the suburb dim projected from the merged frame's
+    ``id_suburb`` (merge_datasets), vehicle types from the RAW
+    (unfiltered) EV frame."""
     dim_time = spark.createDataFrame(
         [(2022, 2022, False), (2023, 2023, True)],
         "id_time long, YEAR long, IS_CURRENT_YEAR boolean",
     )
-    dim_suburb = add_surrogate_key(
-        final_df.select(F.col("SUBURB").alias("SUBURB_NAME")), "id_suburb", ["SUBURB_NAME"]
-    ).select("id_suburb", "SUBURB_NAME")
+    dim_suburb = final_df.select("id_suburb", F.col("SUBURB").alias("SUBURB_NAME"))
     dim_vehicle = add_surrogate_key(
         ev_raw.select(F.trim("VEHICLE_TYPE").alias("VEHICLE_TYPE")).distinct(),
         "id_vehicle_type",
@@ -241,22 +245,18 @@ def build_facts(
 ) -> tuple[DataFrame, DataFrame]:
     """Fact tables (reference create_fact_tables, main.py:240-349).
 
-    Key resolution is a broadcast left join to the suburb dim
-    (main.py:245-251); 2023 metrics keep the reference's unguarded-
-    then-scrubbed semantics; synthesized 2022 rows use the guarded
-    ratios (safe_ev_per_energy / safe_no2_per_ev, main.py:304-331) —
-    there a row-wise Python .apply, here codegen'd `when` chains. Ids
-    follow sorted-suburb order, 2022 block offset by n (main.py:288).
+    One fact row per merged row, keyed by its ``id_suburb``: the EV
+    fact id and the 2023 energy id ARE ``id_suburb``; the synthesized
+    2022 block continues at ``id_suburb + n`` (main.py:288-291), n
+    being the suburb dim's row count. 2023 metrics keep the reference's
+    unguarded-then-scrubbed semantics; 2022 rows use the guarded ratios
+    (safe_ev_per_energy / safe_no2_per_ev, main.py:304-331) — there a
+    row-wise Python .apply, here codegen'd `when` chains.
     """
-    n_rows = final_df.count()  # reference: len(final_df) for the id offset
-    with_keys = final_df.join(
-        F.broadcast(dim_suburb),
-        final_df.SUBURB == dim_suburb.SUBURB_NAME,
-        "left",
-    )
+    n_rows = dim_suburb.count()  # reference: len(final_df) for the id offset
 
-    ev_fact = add_surrogate_key(with_keys, "fact_ev_impact_id", ["SUBURB"]).select(
-        "fact_ev_impact_id",
+    ev_fact = final_df.select(
+        F.col("id_suburb").alias("fact_ev_impact_id"),
         "id_suburb",
         F.lit(2023).alias("YEAR"),
         F.col("TOTAL_EVs").alias("TOTAL_EVS"),
@@ -267,8 +267,8 @@ def build_facts(
         scrub_nonfinite("EV_ADOPTION_SCORE").alias("EV_ADOPTION_SCORE"),
     )
 
-    energy_2023 = add_surrogate_key(with_keys, "fact_energy_pollution_id", ["SUBURB"]).select(
-        "fact_energy_pollution_id",
+    energy_2023 = final_df.select(
+        F.col("id_suburb").alias("fact_energy_pollution_id"),
         "id_suburb",
         F.lit(2023).alias("YEAR"),
         F.col("CONSUMPTION_2023").alias("ENERGY_CONSUMPTION"),
@@ -280,10 +280,8 @@ def build_facts(
         scrub_nonfinite("NO2_PER_EV").alias("NO2_PER_EV"),
     )
 
-    energy_2022 = add_surrogate_key(
-        with_keys, "fact_energy_pollution_id", ["SUBURB"], offset=n_rows
-    ).select(
-        "fact_energy_pollution_id",
+    energy_2022 = final_df.select(
+        (F.col("id_suburb") + n_rows).alias("fact_energy_pollution_id"),
         "id_suburb",
         F.lit(2022).alias("YEAR"),
         F.col("CONSUMPTION_2022").alias("ENERGY_CONSUMPTION"),
@@ -321,59 +319,40 @@ def run_pipeline(spark: SparkSession, data_dir: str) -> StarSchema:
     return StarSchema(dim_time, dim_suburb, dim_vehicle, dim_fuel, ev_fact, energy_fact)
 
 
-def write_star_schema(
-    star: StarSchema,
-    out_dir: str,
-    fmt: str = "parquet",
-    quality_gate: bool = True,
-    plan_gate: bool = True,
-) -> dict[str, dict[str, object]]:
+def write_star_schema(star: StarSchema, out_dir: str) -> dict[str, dict[str, object]]:
     """Load stage (reference load_to_azure + CSV side-writes,
-    main.py:214-236,345-346,351-369): facts partitioned by YEAR —
-    partition pruning for every per-year dashboard query is free
-    (SURVEY §4) — dims unpartitioned. CSV sink supported for parity;
-    Parquet is the engine contract.
+    main.py:214-236,345-346,351-369) as Parquet: facts partitioned by
+    YEAR — partition pruning for every per-year dashboard query is free
+    (SURVEY §4) — dims unpartitioned.
 
-    ``quality_gate`` attaches ``observe()`` metrics to each fact write
-    (operators/quality.py) — the metrics ride the write job itself (no
-    validation re-scan) and the load REFUSES to pass silently if a fact
-    came out empty or its dimension join sprouted null surrogate keys:
-    the Spark-native form of the reference's post-stage print checks
-    (main.py:392-433), turned from console output into a hard gate.
-    Returns per-table collected metrics for caller-side audit logs.
+    Before any write starts, plans/guard.py admission control checks
+    every table: a transform edit that turns a join cartesian or adds a
+    row-wise Python UDF fails the load at submit time, not as a cluster
+    incident. The star frames carry no waivers — every join in this
+    pipeline is broadcast/equi by design, so any banned shape is a
+    regression.
 
-    ``plan_gate`` additionally runs plans/guard.py admission control on
-    every table BEFORE any write starts: a transform edit that silently
-    turns a dimension join cartesian or introduces a row-wise Python
-    UDF fails the load at submit time, not as a cluster incident. The
-    star frames carry no waivers — every join in this pipeline is
-    broadcast/equi by design, so any banned shape is a regression."""
+    Each fact write carries an ``observe()`` row count
+    (operators/quality.py) that rides the write job itself (no
+    validation re-scan); the load REFUSES to pass silently if a fact
+    came out empty — the Spark-native form of the reference's
+    post-stage print checks (main.py:392-433), turned from console
+    output into a hard gate. Returns the per-fact collected metrics for
+    caller-side audit logs."""
     from ecowatt_etl_spark.operators.quality import expect, observe_quality
     from ecowatt_etl_spark.plans.guard import assert_scalable
 
-    if plan_gate:
-        for df in star.tables().values():
-            assert_scalable(df)
+    for df in star.tables().values():
+        assert_scalable(df)
     collected: dict[str, dict[str, object]] = {}
     for name, df in star.tables().items():
-        obs = None
-        if quality_gate and name.startswith("fact_"):
-            df, obs = observe_quality(
-                df, name=f"load_{name}", null_cols=["id_suburb"]
-            )
-        writer = df.write.mode("overwrite")
-        if name.startswith("fact_"):
-            writer = writer.partitionBy("YEAR")
-        if fmt == "csv":
-            writer.options(header=True).csv(f"{out_dir}/{name}")
-        else:
-            writer.parquet(f"{out_dir}/{name}")
-        if obs is not None:
-            collected[name] = expect(
-                obs,
-                n_rows=lambda v: v > 0,
-                n_null_id_suburb=lambda v: v == 0,
-            )
+        path = f"{out_dir}/{name}"
+        if not name.startswith("fact_"):
+            df.write.mode("overwrite").parquet(path)
+            continue
+        df, obs = observe_quality(df, name=f"load_{name}", null_cols=[])
+        df.write.mode("overwrite").partitionBy("YEAR").parquet(path)
+        collected[name] = expect(obs, n_rows=lambda v: v > 0)
     return collected
 
 

@@ -687,7 +687,7 @@ from ecowatt_etl_spark.queries.dedup_queries import _Q53_ORACLE  # noqa: E402
 @query(
     "q121_contrastive_triplets",
     oracle=f"""
-    WITH pairs AS ({_Q53_ORACLE}),
+    WITH pairs AS MATERIALIZED ({_Q53_ORACLE}),
     n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
     t0 AS (
       SELECT id_a, id_b, jaccard_sim,

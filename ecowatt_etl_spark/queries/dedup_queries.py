@@ -205,6 +205,11 @@ _Q53_ORACLE = f"""
     JOIN sizes sa ON sa.doc_id = c.id_a
     JOIN sizes sb ON sb.doc_id = c.id_b
 """
+# Oracles that reuse these pairs name them ``pairs AS MATERIALIZED``:
+# DuckDB otherwise inlines the CTE at every reference, and the unrolled
+# graph rounds below reference it through ever-wider CTE trees (q212's
+# oracle at sf0.01 on 4 cores: 350 s inlined, 11 s materialized, with
+# identical rows).
 
 
 @query("q53_minhash_lsh_pairs", oracle=_Q53_ORACLE)
@@ -567,7 +572,7 @@ _LP_MAX_ROUNDS = 20  # label-propagation bound ≈ max near-dup chain diameter
 # Shared recursive-CTE fixpoint over the near-dup graph (q57's oracle
 # core, reused by q59's keep-list).
 _Q57_CTE = f"""
-    WITH RECURSIVE pairs AS ({_Q53_ORACLE}),
+    WITH RECURSIVE pairs AS MATERIALIZED ({_Q53_ORACLE}),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs WHERE jaccard_sim >= {_CLUSTER_T}
       UNION ALL
@@ -1151,7 +1156,7 @@ def q282_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q89_neardup_triangles",
     oracle=f"""
-    WITH pairs AS ({_Q53_ORACLE}),
+    WITH pairs AS MATERIALIZED ({_Q53_ORACLE}),
     e AS (
       SELECT id_a AS a, id_b AS b FROM pairs
       WHERE jaccard_sim >= {_CLUSTER_T}
@@ -1264,7 +1269,7 @@ def _pr_iter_sql(k: int) -> str:
 @query(
     "q120_pagerank_neardup",
     oracle=f"""
-    WITH pairs AS ({_Q53_ORACLE}),
+    WITH pairs AS MATERIALIZED ({_Q53_ORACLE}),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs WHERE jaccard_sim >= {_CLUSTER_T}
       UNION ALL
@@ -2004,7 +2009,7 @@ def _bfs_iter_sql(k: int) -> str:
 @query(
     "q212_bfs_hops",
     oracle=f"""
-    WITH pairs AS ({_Q53_ORACLE}),
+    WITH pairs AS MATERIALIZED ({_Q53_ORACLE}),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs WHERE jaccard_sim >= {_CLUSTER_T}
       UNION ALL

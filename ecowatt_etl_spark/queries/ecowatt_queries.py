@@ -107,7 +107,7 @@ def qe01_ev_dashboard_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(n.SUBURB_KEY AS BIGINT) AS id_suburb,
            -- the engine keys the 2023 block 1..n then continues the
-           -- non-2023 block at n+1 (add_surrogate_key offset=n_rows);
+           -- non-2023 block at n+1 (build_facts: id_suburb + n);
            -- the golden CSV's index RESTARTS per block, so replay the
            -- offset for the later block
            CAST(n.column0 + 1

@@ -74,41 +74,54 @@ def _load_all() -> None:
 # hand ledger ever noticing; 50 re-certify this round, the remainder
 # spill to r9 exactly like the r3–r6 rotation era.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # ---- r12 window (50 slots, regenerated by evidence_ledger
-    # --window after the round's second wave): round-12 rewrites lead
-    # — q215's long-multiply aggregate, the scale-adaptive state
-    # sizing of the applyInPandasWithState replays (q252/q133/q49),
-    # q192's transform-built grams + gated eval broadcast, q223
-    # per-column NDV, q207/q86 grouped pairs, q104 two-level agg,
-    # q246 thresholded levenshtein, q171 self-pair guard, q78 guard,
-    # the q155-family pairs cache and the lazy doc_token_stats build
-    # that reaches q144/q214 and the packing/layout consumers (q190's
-    # pre-agg was measured slower at 100x and REVERTED, restoring its
-    # evidenced fingerprint) — then pure longest-unrowed-first
-    # rotation.
-    "q215_bootstrap_ci",
-    "q252_stream_clamped_balance",
-    "q207_basket_rules",
-    "q223_column_stats",
-    "q270_training_manifest",
-    "q272_truncation_loss",
-    "q275_length_batching",
-    "q276_mixture_sampler",
-    "q133_stream_ewma",
-    "q262_sequence_packing",
-    "q265_incremental_packing",
-    "q267_source_packing",
-    "q274_packed_shards",
-    "q49_stream_stateful_totals",
+    # ---- window regenerated by evidence_ledger --window after the
+    # EcoWatt star was keyed once (qe01-qe08 and q18 through
+    # operators/keys.py) and the oracles that reuse the q53 pairs CTE
+    # began materializing it (q57/q59/q135/q282/q283/q284 via _Q57_CTE,
+    # q89, q120, q121, q212): those rewrites lead, then the r12
+    # rotation continues longest-unrowed-first.
+    "qe05_year_filter",
+    "qe06_combined_analysis",
+    "qe07_normalized_scores",
+    "qe01_ev_dashboard_base",
+    "qe02_energy_dashboard_base",
+    "qe08_adhoc_sql",
+    "q120_pagerank_neardup",
+    "q121_contrastive_triplets",
+    "q135_dedup_impact",
+    "q212_bfs_hops",
+    "q282_leakage_safe_split",
+    "q283_shortcut_clusters",
+    "q284_incremental_clusters",
+    "q57_dedup_clusters",
+    "q59_dedup_keep_list",
+    "q89_neardup_triangles",
+    "q18_surrogate_keys",
+    "qe03_kpi_row",
+    "qe04_top_suburbs",
     "q104_sole_fault_supplier",
+    "q133_stream_ewma",
     "q144_boilerplate_strip",
     "q155_semantic_neardup",
     "q171_tfidf_shingle_pairs",
     "q192_ngram_overlap_report",
+    "q207_basket_rules",
     "q214_memorization_spans",
+    "q215_bootstrap_ci",
+    "q223_column_stats",
     "q246_record_linkage",
+    "q252_stream_clamped_balance",
+    "q262_sequence_packing",
+    "q265_incremental_packing",
+    "q267_source_packing",
+    "q270_training_manifest",
+    "q272_truncation_loss",
+    "q274_packed_shards",
+    "q275_length_batching",
+    "q276_mixture_sampler",
     "q285_semantic_recall_audit",
     "q286_semantic_keep_list",
+    "q49_stream_stateful_totals",
     "q78_bigram_novelty",
     "q86_term_cooccurrence",
     "q109_top_supplier",
@@ -117,6 +130,7 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "q112_disjunctive_pred",
     "q113_dormant_customers",
     "q114_min_cost_supplier",
+    # ---- window cutoff (50) — slots below only order the tail
     "q124_forecast_revenue",
     "q125_returned_customers",
     "q126_dominant_suppliers",
@@ -125,27 +139,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "q143_schema_evolution",
     "q145_xml_roundtrip",
     "q146_partitioned_write_prune",
-    "q147_merge_upsert",
-    "q148_scd2_history",
-    "q149_stream_cdc_upsert",
-    "q150_recursive_cte",
-    "q151_grouped_agg_udaf",
-    "q152_dq_audit",
-    "q153_bm25_search",
-    "q159_rollup_revenue",
-    "q160_median_order_value",
-    "q161_countmin_audit",
-    "q162_interpolated_gapfill",
-    # ---- round-12 window cutoff (50) — slots below only order the
-    # tail (r13 spill continues from here)
-    "q163_kmv_distinct",
-    "q164_ohlc_bars",
-    "q165_time_weighted_avg",
-    "q166_locf_impute",
-    "q167_mad_anomalies",
-    "q168_zorder_layout",
-    "q170_weighted_sample",
-    "qe05_year_filter",
 )
 
 

@@ -40,7 +40,7 @@ def read_electricity(spark: SparkSession, path: str) -> DataFrame:
     return normalize_headers(df)
 
 
-def read_pollution(spark: SparkSession, path: str, skip_rows: int = 2) -> DataFrame:
+def read_pollution(spark: SparkSession, path: str) -> DataFrame:
     """Pollution scan: skip 2 title rows, 3rd line is the header
     (reference main.py:31-32 header=2).
 
@@ -52,7 +52,7 @@ def read_pollution(spark: SparkSession, path: str, skip_rows: int = 2) -> DataFr
     lines = (
         sc.textFile(path)
         .zipWithIndex()
-        .filter(lambda t: t[1] >= skip_rows)
+        .filter(lambda t: t[1] >= 2)
         .map(lambda t: t[0])
     )
     df = spark.read.options(header=True, inferSchema=False).csv(lines)

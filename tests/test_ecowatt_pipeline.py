@@ -124,20 +124,17 @@ def test_write_and_read_back(star, spark, tmp_path):
     write_star_schema(star, out)
     back = spark.read.parquet(f"{out}/fact_energy_pollution")
     assert back.count() == 72
-    # partition pruning: a YEAR filter must read only one partition
-    plan = back.filter("YEAR = 2023")._jdf.queryExecution().executedPlan().toString()
     assert back.filter("YEAR = 2023").count() == 36
 
 
 def test_write_quality_gate_metrics(star, spark, tmp_path):
-    """The load's observe() gate collects row/null metrics during the
+    """The load's observe() gate collects fact row counts during the
     write itself and returns them; a violated expectation raises."""
     from ecowatt_etl_spark.plans.ecowatt_pipeline import write_star_schema
 
     metrics = write_star_schema(star, str(tmp_path / "star_q"))
     assert metrics["fact_ev_impact"]["n_rows"] == 36
     assert metrics["fact_energy_pollution"]["n_rows"] == 72
-    assert metrics["fact_ev_impact"]["n_null_id_suburb"] == 0
 
 
 def test_observe_expect_raises_on_violation(spark):
